@@ -14,9 +14,6 @@ import duckdb
 
 STATS = ["1. count", "2. count_distinct", "3. mean", "4. std", "5. min",
          "6. median", "7. max", "8. sum"]
-TRINO_TYPES = {"BIGINT": "bigint", "INTEGER": "integer", "DOUBLE": "double",
-               "VARCHAR": "varchar", "TIMESTAMP": "timestamp(3)",
-               "FLOAT[]": "array(real)"}
 
 
 def connect(base):
@@ -44,33 +41,6 @@ def same_cell(got, want, abs_tol=1e-9):
         return g is not None and math.isclose(g, float(want), rel_tol=1e-9,
                                               abs_tol=abs_tol)
     return got == str(want)
-
-
-def _key(row):
-    return tuple(f"{float(c):.6g}" if _num(c) is not None else str(c)
-                 for c in row)
-
-
-def same_rows(got, want, skip=()):
-    if len(got) != len(want):
-        return False
-
-    def match(g, w):
-        return all(same_cell(a, b) for i, (a, b) in enumerate(zip(g, w))
-                   if i not in skip) and len(g) == len(w)
-
-    if all(match(g, w) for g, w in zip(got, want)):
-        return True
-    # ties in ORDER BY may order equal keys differently
-    got_s = sorted(got, key=_key)
-    want_s = sorted(want, key=lambda r: _key(["" if c is None else c for c in r]))
-    return all(match(g, w) for g, w in zip(got_s, want_s))
-
-
-def read_tsv(path):
-    with open(path, encoding="utf-8") as f:
-        lines = f.read().rstrip("\n").split("\n")
-    return lines[0].split("\t"), [ln.split("\t") for ln in lines[1:]]
 
 
 def profile_stats(con, table, cols):
@@ -112,36 +82,6 @@ def parse_aligned(text):
         return [ln[a:b].strip() for a, b in zip(starts, starts[1:] + [None])]
 
     return labels, [cells(ln) for ln in lines[1:]]
-
-
-def check_athena(con, out, checks):
-    bad = {}
-    for q in checks["queries"]:
-        labels, rows = read_tsv(os.path.join(out, q["file"]))
-        kind = q["check"]
-        try:
-            if kind.startswith("profile:"):
-                err = check_profile(labels, rows, profile_stats(
-                    con, q["duck"], kind.split(":", 1)[1].split(",")))
-            else:
-                want = con.execute(q["duck"]).fetchall()
-                skip = ()
-                if kind == "columns":
-                    want = [(n, TRINO_TYPES.get(t, t), p) for n, t, p in want]
-                if kind.startswith("between:"):
-                    i, lo, hi = map(int, kind.split(":")[1:])
-                    skip = (i,)
-                    if not all(_num(r[lo]) <= _num(r[i]) <= _num(r[hi]) for r in rows):
-                        raise AssertionError("median outside [min, max]")
-                err = None if same_rows(rows, want, skip) else "rows differ from DuckDB"
-        except Exception as e:  # a failing twin is a failed check
-            err = f"{type(e).__name__}: {e}"
-        for rid in q["rids"]:
-            if err:
-                bad[rid] = f"{q['template']}: {err}"
-        for rid in q["unstable_rids"]:
-            bad[rid] = f"{q['template']}: repeat returned different rows"
-    return bad
 
 
 def check_vimdiff(con, out, checks):
@@ -227,9 +167,6 @@ def check_cdc(con, out, checks):
 
 def run(base, out, checks):
     con = connect(base)
-    kind = checks["kind"]
-    if kind == "athena":
-        return check_athena(con, out, checks)
-    if kind == "vimdiff":
+    if checks["kind"] == "vimdiff":
         return check_vimdiff(con, out, checks)
     return check_cdc(con, out, checks)

@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Benchmark of the Athena-CLI engine: one workload per invocation.
 
-    python3 perfbench/run.py --workload athena_query --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload vimdiff --seed 1 --seconds 4 --trace 0
 
 Builds the engine and the benchmark harness from source (cached in
-.bench_build/ by a hash of the sources), generates the base tables once
-per checkout, runs one JVM that sets up, warms up and measures the
+.bench_build/ by a hash of the sources), runs one JVM that registers the
+test corpus in perfbench/data, sets up, warms up and measures the
 workload, checks every output against DuckDB, and prints the metrics.
 The last line of standard output is one JSON object: the end-to-end
 metrics with --trace 0, the per-layer metrics with --trace 1.
@@ -26,6 +26,7 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
+DATA = os.path.join(HERE, "data", "sf0.01")
 JVM_TIMEOUT_S = 160
 
 # JDK 17 module opens Spark needs outside spark-submit (as in build.sbt).
@@ -128,16 +129,14 @@ def run_jvm(classes, jars, base, work, args):
         return json.load(f)
 
 
-def pct(xs, p):
-    """Nearest-rank percentile."""
-    s = sorted(xs)
-    return s[max(0, math.ceil(p * len(s)) - 1)]
+def beyond(n, p):
+    """Samples above the nearest-rank p-th percentile of n samples."""
+    return n - max(1, math.ceil(p * n))
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True,
-                    choices=["athena_query", "vimdiff", "cdc_merge"])
+    ap.add_argument("--workload", required=True, choices=["vimdiff", "cdc_merge"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -148,19 +147,19 @@ def main():
         spec = json.load(f)
 
     jars = spark_jars()
+    if not os.path.exists(os.path.join(DATA, "orders.parquet")):
+        fail(f"test corpus not found in {os.path.relpath(DATA, ROOT)}")
     classes = build(jars)
     sys.dont_write_bytecode = True
     sys.path.insert(0, HERE)
     import check
-    import gen
-    base = gen.ensure(os.path.join(BUILD, "data"))
 
     work = os.path.join(BUILD, f"run-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     try:
-        rep = run_jvm(classes, jars, base, work, args)
+        rep = run_jvm(classes, jars, DATA, work, args)
         out = os.path.join(work, "out")
-        bad = check.run(base, out, rep["checks"])
+        bad = check.run(DATA, out, rep["checks"])
         if args.trace:
             shutil.copy(os.path.join(out, "trace.jsonl"),
                         os.path.join(BUILD, f"trace-{args.workload}.jsonl"))
@@ -175,60 +174,61 @@ def main():
     for r in errors[:10]:
         print(f"FAILED request {r['rid']}: {r['error']}")
     ok = [r for r in reqs if r["error"] is None]
-    # a failed request counts as missing every latency limit
-    lat = [r["wall_s"] if r["error"] is None else math.inf for r in reqs]
+    n = len(reqs)
     window = rep["window_s"]
+    # round 0 starts a cold JVM; set-up time is the median CPU time (main
+    # thread plus its Spark tasks) of the warm rounds
+    warm_setup = rep["setup_rounds_cpu_s"][1:]
     e2e = {
-        "setup_s": statistics.median(rep["setup_rounds_s"]),
-        "cpu_per_request_s": rep["window_cpu_s"] / max(len(reqs), 1),
-        "latency_p50_s": statistics.median(lat) if lat else math.inf,
-        "throughput_per_s": len(ok) / window,
+        "setup_s": statistics.median(warm_setup),
+        # mean CPU time (client thread plus its Spark tasks) of the correct
+        # requests; a failed or wrong request does not count as work done
+        "cpu_per_request_s": sum(r["cpu_s"] for r in ok) / len(ok) if ok else math.inf,
     }
 
     cfg = rep["config"]
     print(f"workload {rep['workload']}: {rep['clients']} client(s), closed loop, "
           f"seed {rep['seed']}, window {window:.2f} s")
     print("config " + json.dumps(cfg, sort_keys=True))
-    print(f"setup rounds {['%.3f' % x for x in rep['setup_rounds_s']]} s, "
+    print(f"setup rounds {['%.3f' % x for x in rep['setup_rounds_s']]} s wall, "
+          f"{['%.3f' % x for x in rep['setup_rounds_cpu_s']]} s cpu (first is cold), "
           f"register {['%.3f' % x for x in rep['register_s']]} s, "
           f"warm-up {rep['warmup_s']:.2f} s")
-
-    def line(name, value, unit, n):
-        print(f"metric {name} = {value:.6g} {unit} (n={n})")
-
     print("request walls " + " ".join(f"{r['wall_s']:.3f}" for r in reqs) + " s")
-    n = len(reqs)
-    line("setup_s", e2e["setup_s"], "s", len(rep["setup_rounds_s"]))
-    line("cpu_per_request_s", e2e["cpu_per_request_s"], "s", n)
-    line("latency_p50_s", e2e["latency_p50_s"], "s", n)
-    line("throughput_per_s", e2e["throughput_per_s"], "1/s", len(ok))
+    print("request cpu " + " ".join(f"{r['cpu_s']:.3f}" for r in reqs) + " s")
+
+    def line(name, value, unit, k):
+        print(f"metric {name} = {value:.6g} {unit} (n={k})")
+
+    def median_line(name, xs):
+        """A median, only when at least ten samples lie above it."""
+        above = beyond(len(xs), 0.5)
+        if above >= 10:
+            line(name, statistics.median(xs), "s", len(xs))
+        else:
+            print(f"metric {name} not reported: n={len(xs)} leaves {above} "
+                  f"samples above the median, fewer than ten")
+
+    # a failed request counts as missing every latency limit
+    lat = [r["wall_s"] if r["error"] is None else math.inf for r in reqs]
+    line("setup_s", e2e["setup_s"], "s", len(warm_setup))
+    line("setup_wall_s", statistics.median(rep["setup_rounds_s"][1:]), "s", len(warm_setup))
+    line("cpu_per_request_s", e2e["cpu_per_request_s"], "s", len(ok))
+    # the whole JVM's CPU (JIT, GC and Spark's own threads included)
+    line("jvm_cpu_per_request_s", rep["window_cpu_s"] / max(len(ok), 1), "s", len(ok))
+    line("throughput_per_s", len(ok) / window, "1/s", len(ok))
     line("fail_ratio", len(errors) / max(n, 1), "ratio", n)
     line("cache_peak_mb", rep["cache_peak_mb"], "MB", 1)
-    w = rep["workload"]
-    if w == "athena_query":
-        line("query_p50_s", e2e["latency_p50_s"], "s", n)
-        if n >= 100:
-            line("query_p90_s", pct(lat, 0.9), "s", n)
-        else:
-            print(f"metric query_p90_s not reported: n={n} leaves fewer than "
-                  f"ten samples above p90")
-        line("query_per_s", e2e["throughput_per_s"], "1/s", len(ok))
-        by_t = {}
-        for t in rep["checks"]["templates"]:
-            by_t.setdefault(t["template"], []).append(
-                next(r["wall_s"] for r in reqs if r["rid"] == t["rid"]))
-        for t, xs in sorted(by_t.items()):
-            print(f"  template {t}: n={len(xs)} p50={statistics.median(xs):.4f} s")
-    elif w == "vimdiff":
-        line("vimdiff_p50_s", e2e["latency_p50_s"], "s", n)
+    median_line("latency_p50_s", lat)
+    if rep["workload"] == "vimdiff":
+        median_line("vimdiff_p50_s", lat)
         rows = rep["checks"]["rows"]  # orders plus its drifted copy
+        # a mean rate over the window's correct requests, not a percentile
         line("vimdiff_rows_per_s", rows * len(ok) / max(sum(r["wall_s"] for r in ok), 1e-9),
              "rows/s", len(ok))
     else:
-        line("merge_p50_s", statistics.median(r["parts"]["merge_s"] for r in ok), "s", len(ok))
-        line("read_after_merge_p50_s",
-             statistics.median(r["parts"]["read_s"] for r in ok), "s", len(ok))
-        line("cdc_request_p50_s", e2e["latency_p50_s"], "s", n)
+        median_line("merge_p50_s", [r["parts"]["merge_s"] for r in ok])
+        median_line("read_after_merge_p50_s", [r["parts"]["read_s"] for r in ok])
 
     if args.trace:
         layers = rep["layers"] or {}

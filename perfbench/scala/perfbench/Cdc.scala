@@ -12,16 +12,15 @@ import graft.ext.TableLog
   * a TableLog table initialised from `orders`. Each request is one
   * MERGE statement through `MergeSql.execute`, then a read of the new
   * version and of the one before it (`FOR VERSION AS OF`) through
-  * `TableLogSql.select`; every `CompactEvery` commits the request
-  * also runs `TableLog.compact`.
+  * `TableLogSql.select`, then `TableLog.compact`. Every request does
+  * the same steps, so the mean over a window does not depend on how
+  * many requests fit into it.
   */
 final class Cdc(seed: Long) extends Workload {
   val name = "cdc_merge"
   val clients = 1
-  override val sampled = true
   /** Change batches written per run; request i applies batch i. */
   val Batches = 48
-  val CompactEvery = 3
   override def capacity: Int = Batches
 
   private var spark: SparkSession = _
@@ -31,25 +30,30 @@ final class Cdc(seed: Long) extends Workload {
   private var batchFileBytes = 0L
 
   /** ~1% of keys per batch (each key in at most one batch): 70% of
-    * those updated, 30% deleted, plus 300 inserts of fresh keys.
+    * those updated, 30% deleted, plus fresh keys inserted, as many as
+    * 1% of the table's rows. Updated and inserted customer keys are
+    * drawn from the range `orders` uses.
     */
   def prepare(s: SparkSession, d: Path): Unit = {
     spark = s
     dir = d
     val batches = d.resolve("cdc_batches.parquet").toString
     val orders = spark.table("orders")
+    val stats = orders.selectExpr("count(*)", "max(o_custkey) + 1").head
+    val inserts = stats.getLong(0) / 100
+    val custkeys = stats.getLong(1)
     val changed = orders
       .withColumn("batch_id", expr(s"pmod(hash(o_orderkey, ${seed}L), 100)"))
       .where(s"batch_id <= $Batches")
       .selectExpr("batch_id", "o_orderkey",
         s"IF(pmod(hash(o_orderkey, batch_id, ${seed}L, 1), 10) < 7, 'U', 'D') AS op",
-        s"pmod(hash(o_orderkey, batch_id, ${seed}L, 2), 15000) AS o_custkey",
+        s"pmod(hash(o_orderkey, batch_id, ${seed}L, 2), $custkeys) AS o_custkey",
         s"round(o_totalprice * (0.9 + pmod(hash(o_orderkey, batch_id, ${seed}L, 3), 2000) / 10000.0), 2) AS o_totalprice",
         "o_orderdate")
     val inserted = spark.range(Batches + 1).withColumnRenamed("id", "batch_id")
-      .crossJoin(spark.range(300).withColumnRenamed("id", "i"))
-      .selectExpr("batch_id", "10000000 + batch_id * 1000 + i AS o_orderkey", "'I' AS op",
-        s"pmod(hash(batch_id, i, ${seed}L), 15000) AS o_custkey",
+      .crossJoin(spark.range(inserts).withColumnRenamed("id", "i"))
+      .selectExpr("batch_id", s"1000000000 + batch_id * $inserts + i AS o_orderkey", "'I' AS op",
+        s"pmod(hash(batch_id, i, ${seed}L), $custkeys) AS o_custkey",
         s"round(1000 + pmod(hash(batch_id, i, ${seed}L, 1), 49900000) / 100.0, 2) AS o_totalprice",
         "CAST(timestamp_micros(788918400000000 + pmod(hash(batch_id, i), 2400) * 86400000000)" +
           " AS TIMESTAMP_NTZ) AS o_orderdate")
@@ -62,7 +66,6 @@ final class Cdc(seed: Long) extends Workload {
     val base = orders.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
     table = d.resolve("orders_cdc").toString
     TableLog.init(base, table)
-    TableLog.init(base, d.resolve("orders_warm").toString)
   }
 
   def mergeSql(batch: Int): String =
@@ -96,22 +99,19 @@ final class Cdc(seed: Long) extends Workload {
       (r.span("read_current", "exec")(TableLogSql.select(spark, readSql(None), tables).collect().head),
         r.span("read_previous", "exec")(TableLogSql.select(spark, readSql(Some(v - 1)), tables).collect().head))
     }
-    val compactS =
-      if ((batch + 1) % CompactEvery == 0)
-        timed(r.span("compact", "ext")(TableLog.compact(spark, dirOf)))._2
-      else 0.0
+    val compactS = timed(r.span("compact", "ext")(TableLog.compact(spark, dirOf)))._2
     if (r.rid >= 0) reads.put(r.rid, (batch, v, cur, prev))
-    Map("merge_s" -> mergeS, "read_s" -> readS) ++
-      (if (compactS > 0) Map("compact_s" -> compactS) else Map.empty)
+    Map("merge_s" -> mergeS, "read_s" -> readS, "compact_s" -> compactS)
   }
 
-  /** Two requests and a compaction on a separate table: the first
-    * merges of a JVM are still compiling.
+  /** Two requests on a separate table: the first merges of a JVM are
+    * still compiling.
     */
   def warmUp(): Unit = {
     val warm = dir.resolve("orders_warm").toString
+    TableLog.init(spark.table("orders")
+      .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"), warm)
     (0 until 2).foreach(_ => run(Batches, warm, new Req(-1, None, 0)))
-    TableLog.compact(spark, warm)
   }
 
   def request(r: Req): Map[String, Double] = {

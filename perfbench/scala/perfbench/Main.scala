@@ -19,9 +19,13 @@ final class Req(val rid: Int, val tracer: Option[Tracer], val root: Int) {
   }
 }
 
-/** A finished request. Times are System.nanoTime. */
-final case class Done(rid: Int, client: Int, start: Long, end: Long,
-    traced: Boolean, error: Option[String], parts: Map[String, Double]) {
+/** A finished request, the `seq`-th of its client. Times are
+  * System.nanoTime; `cpuS` is the CPU time of the client thread plus
+  * that of the Spark tasks the request ran.
+  */
+final case class Done(rid: Int, client: Int, seq: Int, start: Long, end: Long,
+    traced: Boolean, error: Option[String], parts: Map[String, Double],
+    cpuS: Double) {
   def wallS: Double = (end - start) / 1e9
 }
 
@@ -30,8 +34,6 @@ trait Workload {
   def clients: Int
   /** Requests the seeded inputs can serve; the loop stops there. */
   def capacity: Int = Int.MaxValue
-  /** Sample the request thread's stack in traced requests. */
-  def sampled: Boolean = false
   /** Write this run's seeded inputs under `dir` and register what the
     * requests need. Runs once per set-up round, each time on a fresh
     * session.
@@ -48,16 +50,21 @@ trait Workload {
   def layers(t: Tracer, traced: Seq[Done]): Map[String, Double]
 }
 
-/** Runs one workload: several timed set-up rounds, an untimed warm-up,
-  * then closed-loop clients for the measured window, and writes the
-  * run report (`report.json`) for run.py.
+/** Runs one workload: a cold set-up round, an untimed warm-up, several
+  * timed set-up rounds on the warm JVM, then closed-loop clients for
+  * the measured window, and writes the run report (`report.json`) for
+  * run.py.
   *
   * Usage: perfbench.Main --workload W --seed N --seconds S --trace 0|1
   *   --data DIR --work DIR
   */
 object Main {
   val Cores = 4
-  val SetupRounds = 3
+  /** Set-up rounds per run: a cold one, then warm ones whose median is
+    * the run's set-up time.
+    */
+  val SetupRounds = 6
+  val SetupGroup = "setup"
 
   val SessionConf: Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$Cores]",
@@ -83,15 +90,17 @@ object Main {
     val data = opt("data")
     val work = Paths.get(opt("work"))
     val w: Workload = opt("workload") match {
-      case "athena_query" => new Athena(seed)
       case "vimdiff" => new Vimdiff(seed, data)
       case "cdc_merge" => new Cdc(seed)
       case other => sys.error(s"unknown workload $other")
     }
 
+    val threadCpu = java.lang.management.ManagementFactory.getThreadMXBean
     val setupS = mutable.ArrayBuffer[Double]()
+    val setupCpuS = mutable.ArrayBuffer[Double]()
     val registerS = mutable.ArrayBuffer[Double]()
     var spark: SparkSession = null
+    var warmupS = 0.0
     for (round <- 0 until SetupRounds) {
       if (spark != null) {
         spark.stop()
@@ -99,25 +108,40 @@ object Main {
         SparkSession.clearDefaultSession()
       }
       val t0 = System.nanoTime()
+      val c0 = threadCpu.getCurrentThreadCpuTime
       spark = session()
+      val roundCpu = new TaskCpu
+      spark.sparkContext.addSparkListener(roundCpu)
+      spark.sparkContext.setJobGroup(SetupGroup, "set-up")
       val t1 = System.nanoTime()
       graft.catalog.Tables.register(spark, data)
       registerS += (System.nanoTime() - t1) / 1e9
       w.prepare(spark, work.resolve(s"setup-$round"))
+      spark.sparkContext.clearJobGroup()
       setupS += (System.nanoTime() - t0) / 1e9
+      val c1 = threadCpu.getCurrentThreadCpuTime
+      org.apache.spark.perfbench.Bus.drain(spark.sparkContext)
+      setupCpuS += (c1 - c0) / 1e9 + roundCpu.seconds(SetupGroup)
+      spark.sparkContext.removeSparkListener(roundCpu)
+      // The warm-up follows the cold round, so the rounds after it
+      // time set-up on a compiled JVM.
+      if (round == 0) {
+        val tw = System.nanoTime()
+        w.warmUp()
+        warmupS = (System.nanoTime() - tw) / 1e9
+      }
     }
-
-    val tw = System.nanoTime()
-    w.warmUp()
-    val warmupS = (System.nanoTime() - tw) / 1e9
 
     val gauge = new CacheGauge
     spark.sparkContext.addSparkListener(gauge)
+    val taskCpu = new TaskCpu
+    spark.sparkContext.addSparkListener(taskCpu)
     val tracer = if (trace) Some(new Tracer(spark)) else None
     tracer.foreach(_.start())
-    val (done, windowS, cpuS) = window(spark, w, seconds, tracer)
+    val (requests, windowS, cpuS) = window(spark, w, seconds, tracer)
     tracer.foreach(_.stop())
     org.apache.spark.perfbench.Bus.drain(spark.sparkContext)
+    val done = requests.map(d => d.copy(cpuS = d.cpuS + taskCpu.seconds(Groups.of(d.rid))))
 
     val out = work.resolve("out")
     Files.createDirectories(out)
@@ -126,7 +150,7 @@ object Main {
     val layerMetrics = tracer.map { t =>
       w.layers(t, traced) ++ sparkMetrics(t, traced, gauge) ++
         reconcile(t, traced, done, out.resolve("trace.jsonl")) +
-        ("catalog.register_s" -> Tracer.median(registerS.toSeq))
+        ("catalog.register_s" -> Tracer.median(registerS.drop(1).toSeq))
     }
 
     val report = mutable.LinkedHashMap[String, Any](
@@ -141,13 +165,14 @@ object Main {
         "spark" -> spark.version,
         "scala" -> scala.util.Properties.versionNumberString)),
       "setup_rounds_s" -> setupS.toSeq,
+      "setup_rounds_cpu_s" -> setupCpuS.toSeq,
       "register_s" -> registerS.toSeq,
       "warmup_s" -> warmupS,
       "window_s" -> windowS,
       "window_cpu_s" -> cpuS,
       "cache_peak_mb" -> gauge.peak / 1e6,
       "requests" -> done.map(d => Map(
-        "rid" -> d.rid, "client" -> d.client, "wall_s" -> d.wallS,
+        "rid" -> d.rid, "client" -> d.client, "wall_s" -> d.wallS, "cpu_s" -> d.cpuS,
         "traced" -> d.traced, "error" -> d.error, "parts" -> d.parts)),
       "checks" -> checks,
       "layers" -> layerMetrics)
@@ -160,13 +185,14 @@ object Main {
     * until `seconds` have passed; a request in flight at the deadline
     * completes and counts. In a traced run every other request of a
     * client is traced, so traced and untraced walls can be compared.
-    * Returns the requests, the window's wall time and the CPU time the
-    * whole JVM used in it.
+    * Returns the requests, with the CPU time of their client thread,
+    * the window's wall time and the CPU time the whole JVM used in it.
     */
   def window(spark: SparkSession, w: Workload, seconds: Double,
       tracer: Option[Tracer]): (Seq[Done], Double, Double) = {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val threadCpu = java.lang.management.ManagementFactory.getThreadMXBean
     val cpu0 = os.getProcessCpuTime
     val next = new AtomicInteger()
     val done = new ConcurrentLinkedQueue[Done]()
@@ -176,22 +202,27 @@ object Main {
       new Thread(() => {
         var k = 0
         var rid = next.getAndIncrement()
-        while (System.nanoTime() < deadline && rid < w.capacity) {
+        // A traced run goes on until the client has sent TracedMin
+        // requests, so that after its first one (which pays for the
+        // fresh session) both traced and untraced requests remain.
+        while ((System.nanoTime() < deadline || (tracer.isDefined && k < TracedMin)) &&
+            rid < w.capacity) {
           val traced = tracer.isDefined && k % 2 == 0
           val t = if (traced) tracer else None
           // Single-client requests start from an empty CacheManager:
           // a persisted plan from the previous request must not be
           // read back as if computed (untimed).
           if (w.clients == 1) spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.setJobGroup(Groups.request(rid), w.name)
+          spark.sparkContext.setJobGroup(Groups.of(rid), w.name)
           val s = System.nanoTime()
+          val c0 = threadCpu.getCurrentThreadCpuTime
           val res =
             try {
               Right(t match {
                 case Some(tr) =>
                   tr.span(rid, 0, "request", "bench") { root =>
                     val r = new Req(rid, t, root)
-                    if (w.sampled) tr.sampled(rid)(w.request(r)) else w.request(r)
+                    tr.sampled(rid)(w.request(r))
                   }
                 case None => w.request(new Req(rid, None, 0))
               })
@@ -201,9 +232,10 @@ object Main {
                 Left(e.toString)
             }
           val e = System.nanoTime()
+          val c1 = threadCpu.getCurrentThreadCpuTime
           spark.sparkContext.clearJobGroup()
-          done.add(Done(rid, c, s, e, traced, res.left.toOption,
-            res.getOrElse(Map.empty)))
+          done.add(Done(rid, c, k, s, e, traced, res.left.toOption,
+            res.getOrElse(Map.empty), (c1 - c0) / 1e9))
           k += 1
           rid = next.getAndIncrement()
         }
@@ -249,7 +281,9 @@ object Main {
         def parentAt(ts: Long): Int =
           explicit.filter(s => s.start <= ts && ts < s.end)
             .sortBy(-_.start).headOption.map(_.id).getOrElse(root.id)
+        // a request's last sample may reach past its end
         val spans = explicit ++ t.sampledSpans(d.rid, parentAt)
+          .map(s => s.copy(end = math.min(s.end, root.end)))
         val self = Tracer.selfTimes(spans)
         val jobs = t.jobsOf(Groups.of(d.rid))
         val leafAt = (ms: Long) => spans
@@ -270,17 +304,22 @@ object Main {
       }
     }
     Files.write(file, lines.asJava)
-    val tracedWall = traced.map(_.wallS)
-    val plainWall = all.filter(d => !d.traced && d.error.isEmpty).map(_.wallS)
+    // the first request of each client is left out: it pays for the
+    // fresh session, and it is always a traced one
+    val later = all.filter(d => d.seq > 0 && d.error.isEmpty)
+    val tracedWall = later.filter(_.traced).map(_.wallS)
+    val plainWall = later.filterNot(_.traced).map(_.wallS)
     val n = math.max(unattributed.size, 1)
     selfMs.map { case (l, ms) => s"self.${l}_ms" -> ms / n }.toMap ++ Map(
       "trace.unattributed_frac" -> Tracer.median(unattributed),
       "trace.unreconciled_requests" ->
-        unattributed.count(_ > ReconcileTolerance).toDouble,
-      "trace.overhead_ratio" ->
-        (if (plainWall.isEmpty) 1.0
-         else Tracer.median(tracedWall) / Tracer.median(plainWall)))
+        unattributed.count(_ > ReconcileTolerance).toDouble) ++
+      (if (tracedWall.isEmpty || plainWall.isEmpty) Map.empty
+       else Map("trace.overhead_ratio" -> Tracer.median(tracedWall) / Tracer.median(plainWall)))
   }
+
+  /** Requests each client sends at least, in a traced run. */
+  val TracedMin = 4
 
   /** Share of a traced request's wall time that may fall outside the
     * five measured layers before the request counts as unreconciled.
@@ -288,15 +327,7 @@ object Main {
   val ReconcileTolerance = 0.10
 }
 
-/** Job groups of a request: the harness runs each request under
-  * `req-<rid>`, and QueryManager runs each execution under a job group
-  * named by its execution id, recorded here by the workload.
-  */
+/** The job group the harness runs each request under. */
 object Groups {
-  private val extra = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]()
-  def add(rid: Int, group: String): Unit =
-    extra.merge(rid, Set(group), (a, b) => a ++ b)
-  def request(rid: Int): String = s"req-$rid"
-  def of(rid: Int): Set[String] =
-    Option(extra.get(rid)).getOrElse(Set.empty) + request(rid)
+  def of(rid: Int): String = s"req-$rid"
 }

@@ -7,8 +7,6 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One timed interval of a request. Times are System.nanoTime. */
 final case class SpanRec(id: Int, parent: Int, req: Int, name: String,
@@ -17,8 +15,7 @@ final case class SpanRec(id: Int, parent: Int, req: Int, name: String,
 }
 
 /** A Spark job and the task totals of its stages. */
-final class JobRec(val id: Int, val group: String, val sqlId: Long,
-    val startMs: Long) {
+final class JobRec(val id: Int, val group: String, val startMs: Long) {
   var endMs: Long = -1L
   var tasks = 0
   val taskMs = mutable.ArrayBuffer[Long]()
@@ -50,19 +47,31 @@ final class CacheGauge extends SparkListener {
   }
 }
 
+/** CPU time of finished Spark tasks, by the job group of their stage. */
+final class TaskCpu extends SparkListener {
+  private val stageGroup = new ConcurrentHashMap[Int, String]()
+  private val nanos = new ConcurrentHashMap[String, java.lang.Long]()
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .foreach(stageGroup.put(e.stageInfo.stageId, _))
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    for (g <- Option(stageGroup.get(e.stageId)); m <- Option(e.taskMetrics))
+      nanos.merge(g, m.executorCpuTime + m.executorDeserializeCpuTime, _ + _)
+  def seconds(group: String): Double =
+    Option(nanos.get(group)).map(_.longValue / 1e9).getOrElse(0.0)
+}
+
 /** The traced run's recorder.
   *
   *  - Spans are opened by the benchmark around each call it makes into
   *    a layer, and kept in memory.
   *  - A SparkListener attributes jobs to requests by job group, and
   *    task totals to jobs by stage.
-  *  - A QueryExecutionListener records each SQL execution's planning
-  *    phases.
   *  - A sampler reads the request thread's stack every few
-  *    milliseconds while a request runs inside a call the benchmark
-  *    cannot split (`Cli.run`); runs of samples with the same
-  *    innermost `graft.*` frame become child spans, so time inside
-  *    the CLI is still attributed to a module.
+  *    milliseconds while a traced request runs; runs of samples with
+  *    the same innermost `graft.*` frame become child spans, so time
+  *    inside calls the benchmark cannot split (`Cli.run`) is still
+  *    attributed to a module.
   *
   * Event-derived numbers are read only after [[stop]] has drained the
   * listener bus, so a request's job-end events have all arrived.
@@ -86,13 +95,11 @@ final class Tracer(spark: SparkSession, sampleMicros: Long = 4000L) {
 
   val jobs = mutable.LinkedHashMap[Int, JobRec]()
   private val stageJob = mutable.HashMap[Int, JobRec]()
-  val planMs = new ConcurrentHashMap[Long, Double]()
 
   private val listener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-      val j = new JobRec(e.jobId, prop("spark.jobGroup.id").getOrElse(""),
-        prop("spark.sql.execution.id").map(_.toLong).getOrElse(-1L), e.time)
+      val j = new JobRec(e.jobId, prop("spark.jobGroup.id").getOrElse(""), e.time)
       jobs(e.jobId) = j
       e.stageIds.foreach(stageJob(_) = j)
     }
@@ -111,16 +118,6 @@ final class Tracer(spark: SparkSession, sampleMicros: Long = 4000L) {
           j.inputBytes += m.inputMetrics.bytesRead
         }
       }
-  }
-
-  private val qeListener = new QueryExecutionListener {
-    def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = record(qe)
-    def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
-    private def record(qe: QueryExecution): Unit = {
-      val ph = qe.tracker.phases
-      planMs.put(qe.id, Seq("analysis", "optimization", "planning")
-        .flatMap(ph.get).map(_.durationMs).sum.toDouble)
-    }
   }
 
   private val watched = new ConcurrentHashMap[Thread, Integer]()
@@ -146,7 +143,6 @@ final class Tracer(spark: SparkSession, sampleMicros: Long = 4000L) {
 
   def start(): Unit = {
     sc.addSparkListener(listener)
-    spark.listenerManager.register(qeListener)
     sampler.start()
   }
 
@@ -156,7 +152,6 @@ final class Tracer(spark: SparkSession, sampleMicros: Long = 4000L) {
     sampler.join()
     org.apache.spark.perfbench.Bus.drain(sc)
     sc.removeSparkListener(listener)
-    spark.listenerManager.unregister(qeListener)
   }
 
   // ---- analysis, after stop() ----
@@ -230,8 +225,8 @@ final class Tracer(spark: SparkSession, sampleMicros: Long = 4000L) {
     out.toSeq
   }
 
-  def jobsOf(groups: Set[String]): Seq[JobRec] =
-    jobs.values.filter(j => groups.contains(j.group)).toSeq
+  def jobsOf(group: String): Seq[JobRec] =
+    jobs.values.filter(_.group == group).toSeq
 }
 
 object Tracer {

@@ -14,7 +14,6 @@ import org.apache.spark.sql.functions.expr
 final class Vimdiff(seed: Long, data: String) extends Workload {
   val name = "vimdiff"
   val clients = 1
-  override val sampled = true
 
   val Base = "spark_catalog.default.orders"
   val Target = "spark_catalog.default.orders_v2"
@@ -58,7 +57,10 @@ final class Vimdiff(seed: Long, data: String) extends Workload {
       out.toString("UTF-8")))
   }
 
-  def warmUp(): Unit = run(-1, new Req(-1, None, 0))
+  /** Two requests: after one, the JIT is still compiling vimdiff's
+    * hot paths.
+    */
+  def warmUp(): Unit = (0 until 2).foreach(_ => run(-1, new Req(-1, None, 0)))
 
   def request(r: Req): Map[String, Double] = { run(r.rid, r); Map.empty }
 
